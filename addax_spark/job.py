@@ -18,16 +18,26 @@ split -> schedule -> post). Here:
   its own partitions (dynamic partition overwrite -> idempotent).
 - "metrics" = per-unit rows_read / chunks_encoded / bytes_raw /
   bytes_compressed rows in the manifest (the reference's Communication
-  counters, CommunicationTool.java:30-120).
+  counters, CommunicationTool.java:30-120), counted per day by an
+  Observation on the chunk write itself (no read-back of the written
+  chunks) and committed as one manifest file per batch.
+
+Per-run driver cost is O(batch), not O(history): a date-partitioned input
+is read only at the batch's ``date=`` directories, and the manifest is read
+on the driver with pyarrow, so neither resume nor the summary lists or
+scans the completed days.
 """
 
 from __future__ import annotations
 
+import datetime as dt
+import os
+import threading
 import time
 import uuid
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .manifest import Manifest, UnitMetrics
@@ -96,14 +106,18 @@ class RollupJobSpec:
             self.job_id = f"rollup-{uuid.uuid4().hex[:12]}"
 
 
+def _fs_path(spark: SparkSession, path: str):
+    """(Hadoop Path, its FileSystem): works for file://, hdfs://, s3a://."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return p, p.getFileSystem(spark._jsc.hadoopConfiguration())
+
+
 def list_date_partitions(spark: SparkSession, path: str) -> list[str] | None:
     """Hive-style ``date=YYYY-MM-DD`` partition directories under ``path``,
     via the Hadoop FileSystem API (works for file://, hdfs://, s3a://) —
     a pure metadata listing, no data scan. None if the layout isn't
     date-partitioned."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
+    p, fs = _fs_path(spark, path)
     if not fs.exists(p):
         return None
     days = [
@@ -112,6 +126,30 @@ def list_date_partitions(spark: SparkSession, path: str) -> list[str] | None:
         if st.isDirectory() and st.getPath().getName().startswith("date=")
     ]
     return sorted(days) or None
+
+
+def _has_data(spark: SparkSession, path: str) -> bool:
+    """Whether a partition directory holds anything a parquet scan reads: a
+    visible file or sub-directory (Spark skips names starting _ or .)."""
+    p, fs = _fs_path(spark, path)
+    return any(not st.getPath().getName().startswith(("_", ".")) for st in fs.listStatus(p))
+
+
+#: manifest metric <- chunk column it sums (chunks_encoded counts chunks)
+_CHUNK_SUMS = {"rows_read": "n_points", "bytes_raw": "bytes_raw", "bytes_compressed": "bytes_enc"}
+
+
+def _observe_days(chunks: DataFrame, batch: list[str]) -> tuple[DataFrame, Observation]:
+    """Attach the batch's per-day lineage counters to the chunk table: one
+    conditional count/sum per (day, metric), accumulated as the rows stream
+    into the writer, so the metrics cost no second pass over the chunks."""
+    obs = Observation()
+    exprs = []
+    for i, d in enumerate(batch):
+        on_day = F.to_date("chunk_start") == F.lit(dt.date.fromisoformat(d))
+        exprs.append(F.count(F.when(on_day, 1)).alias(f"chunks_encoded_{i}"))
+        exprs += [F.sum(F.when(on_day, F.col(c))).alias(f"{m}_{i}") for m, c in _CHUNK_SUMS.items()]
+    return chunks.observe(obs, *exprs), obs
 
 
 def run(spark: SparkSession, spec: RollupJobSpec) -> dict:
@@ -130,32 +168,38 @@ def run(spark: SparkSession, spec: RollupJobSpec) -> dict:
     t_ph = time.time()
     if spec.pre_hook is not None:
         spec.pre_hook(spark, spec)
-    raw = spark.read.parquet(spec.input_path)
     man = Manifest(spark, f"{spec.output_root}/_manifest", spec.job_id)
     _ph("init", t_ph)
 
     # --- split: enumerate day units. Preferred input layout is
     # date-partitioned (date=YYYY-MM-DD): discovery is a pure partition
-    # LISTING and each unit's filter partition-prunes the scan. A flat
-    # layout falls back to a ts-column-pruned distinct — a one-column scan
-    # of the whole input before any work; fine at test scale, a documented
-    # cost at 100 TB (repartition the landing zone by date instead).
+    # LISTING and each batch reads only its own date= directories, so a
+    # daily increment never lists the history. A flat layout falls back to
+    # a ts-column-pruned distinct — a one-column scan of the whole input
+    # before any work; fine at test scale, a documented cost at 100 TB
+    # (repartition the landing zone by date instead).
     t_ph = time.time()
-    part_days = list_date_partitions(spark, spec.input_path)
-    if part_days is not None:
-        import datetime as _dt
+    days = list_date_partitions(spark, spec.input_path)
+    if days is not None:
 
-        days = part_days
-        # typed date literals: ANSI mode forbids implicit string<->date in
-        # In(); typed literals also keep the predicate partition-prunable
-        day_filter = lambda batch: F.col("date").isin(  # noqa: E731
-            [_dt.date.fromisoformat(d) for d in batch]
-        )
+        def read_batch(batch: list[str]) -> DataFrame | None:
+            # a date= dir with no files is left out (schema inference over
+            # no files fails); a batch of only such dirs has nothing to read
+            dirs = [f"{spec.input_path}/date={d}" for d in batch]
+            dirs = [d for d in dirs if _has_data(spark, d)]
+            if not dirs:
+                return None
+            return spark.read.option("basePath", spec.input_path).parquet(*dirs)
+
     else:
+        raw = spark.read.parquet(spec.input_path)
         days = sorted(
             r.d.isoformat() for r in raw.select(F.to_date("ts").alias("d")).distinct().collect()
         )
-        day_filter = lambda batch: F.to_date("ts").isin(batch)  # noqa: E731
+
+        def read_batch(batch: list[str]) -> DataFrame | None:
+            return raw.filter(F.to_date("ts").isin(batch))
+
     _ph("discover", t_ph)
     t_ph = time.time()
     done = man.done_keys()
@@ -166,12 +210,48 @@ def run(spark: SparkSession, spec: RollupJobSpec) -> dict:
 
     n_parts = spec.n_partitions or spark.sparkContext.defaultParallelism * 2
 
+    # partitionOverwriteMode pinned PER WRITE: with a user-supplied
+    # session (default static) a batch overwrite would wipe ALL
+    # previously written partitions and a resume would delete completed
+    # days' output.
+    #
+    # No repartition before partitionBy: every writer input here (tier
+    # cascade output, arranged chunk table) is ALREADY hash(conv_id)-
+    # clustered, so the dynamic-partition writer's implicit per-task sort
+    # on `date` fans each (tier, date) cell across ALL n_parts tasks —
+    # strictly more write parallelism than the old (date, salt)
+    # repartition, and it deletes a full extra shuffle per tier (for the
+    # 1m tier that shuffle carried last_text, i.e. ~raw-sized bytes;
+    # measured the largest single scaling cost in the r5 phase profile).
+    # Cost: files/dir = n_parts per date instead of _WRITE_SALT; callers
+    # that need few-big-files (small coarse tiers at modest scale) can
+    # pass salted=True to restore the bounded fan-in.
+    wsalt = F.pmod(F.xxhash64("conv_id"), F.lit(_WRITE_SALT))
+    if spec.salted_writes is None:
+        min_cores = int(os.environ.get("SPARK_GRAFT_SALTED_MIN_CORES", "16"))
+        salted = spark.sparkContext.defaultParallelism >= min_cores
+    else:
+        salted = spec.salted_writes
+
+    def _write_partitioned(df: DataFrame, part_col: str, path: str) -> None:
+        out = df.withColumn("date", F.to_date(part_col))
+        if salted:
+            out = out.repartition(F.col("date"), wsalt)
+        out.write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy("date").parquet(path)
+
     batches = [
         pending[i : i + spec.unit_batch] for i in range(0, len(pending), spec.unit_batch)
     ]
     for batch in batches:
         t0 = time.time()
-        sl = raw.filter(day_filter(batch))
+        sl = read_batch(batch)
+        if sl is None:
+            # nothing on disk for any of its days: no rows, no output
+            wall_each = (time.time() - t0) / len(batch)
+            man.mark_done_batch({d: UnitMetrics(wall_s=wall_each) for d in batch})
+            continue
         cached_raw = False
         if spec.colocate:
             sl = colocate_by_series(sl, n_parts).cache()
@@ -183,8 +263,6 @@ def run(spark: SparkSession, spec: RollupJobSpec) -> dict:
         # turns (BENCH.md r3): batch wall 63 -> 35 s at local[8], and the
         # fitted per-job fixed term drops ~20 -> ~11 s, which is what moves
         # the N->4N scaling efficiency.
-        import threading
-
         write_errors: list[BaseException] = []
         writers: list[threading.Thread] = []
 
@@ -199,41 +277,7 @@ def run(spark: SparkSession, spec: RollupJobSpec) -> dict:
             th.start()
             writers.append(th)
 
-        # partitionOverwriteMode pinned PER WRITE: with a user-supplied
-        # session (default static) a batch overwrite would wipe ALL
-        # previously written partitions and a resume would delete completed
-        # days' output.
-        #
-        # No repartition before partitionBy: every writer input here (tier
-        # cascade output, arranged chunk table) is ALREADY hash(conv_id)-
-        # clustered, so the dynamic-partition writer's implicit per-task sort
-        # on `date` fans each (tier, date) cell across ALL n_parts tasks —
-        # strictly more write parallelism than the old (date, salt)
-        # repartition, and it deletes a full extra shuffle per tier (for the
-        # 1m tier that shuffle carried last_text, i.e. ~raw-sized bytes;
-        # measured the largest single scaling cost in the r5 phase profile).
-        # Cost: files/dir = n_parts per date instead of _WRITE_SALT; callers
-        # that need few-big-files (small coarse tiers at modest scale) can
-        # pass salted=True to restore the bounded fan-in.
-        wsalt = F.pmod(F.xxhash64("conv_id"), F.lit(_WRITE_SALT))
-        if spec.salted_writes is None:
-            import os as _os
-
-            min_cores = int(_os.environ.get("SPARK_GRAFT_SALTED_MIN_CORES", "16"))
-            salted = spark.sparkContext.defaultParallelism >= min_cores
-        else:
-            salted = spec.salted_writes
-
-        def _write_partitioned(df: DataFrame, part_col: str, path: str) -> None:
-            out = df.withColumn("date", F.to_date(part_col))
-            if salted:
-                out = out.repartition(F.col("date"), wsalt)
-            out.write.mode("overwrite").option(
-                "partitionOverwriteMode", "dynamic"
-            ).partitionBy("date").parquet(path)
-
         cached_tiers: list[DataFrame] = []
-        chunks: DataFrame | None = None
         try:
             if cached_raw:
                 # materialize the shared colocated cache BEFORE the chunk
@@ -244,15 +288,18 @@ def run(spark: SparkSession, spec: RollupJobSpec) -> dict:
                 _ph("colocate_cache", t_ph)
             # chunk pipeline first and on its own thread: the Python-worker
             # encode overlaps the JVM-side tier aggregates. NOT cached — the
-            # write thread is its only consumer (per-day metrics are read
-            # back from the written files, a partition-pruned scan of a
-            # ~12x-compressed table), so the encode streams straight into
-            # the writer with no columnar-cache materialization.
-            chunks = encode_chunks(
-                sl,
-                value=F.expr(spec.value_expr).cast("double"),
-                chunk_tier=spec.chunk_tier,
-                order_cols=list(spec.order_cols),
+            # write thread is its only consumer (the per-day metrics are an
+            # Observation on that same write), so the encode streams
+            # straight into the writer with no columnar-cache
+            # materialization.
+            chunks, chunk_obs = _observe_days(
+                encode_chunks(
+                    sl,
+                    value=F.expr(spec.value_expr).cast("double"),
+                    chunk_tier=spec.chunk_tier,
+                    order_cols=list(spec.order_cols),
+                ),
+                batch,
             )
             _spawn(lambda: _write_partitioned(chunks, "chunk_start", f"{spec.output_root}/chunks"))
 
@@ -266,8 +313,6 @@ def run(spark: SparkSession, spec: RollupJobSpec) -> dict:
             # subtree must be the exact plan both consumers reference, and
             # racing an unmaterialized cache duplicates the upstream compute
             # (measured +25% at local[2]).
-            from .operators.rollup import rollup_cascade_step, rollup_from_raw
-
             slc = sl if spec.colocate else sl.repartition(n_parts, "conv_id")
             cur: DataFrame | None = None
             for i, t in enumerate(spec.tiers):
@@ -298,47 +343,24 @@ def run(spark: SparkSession, spec: RollupJobSpec) -> dict:
             _ph("writers_join", t_ph)
             if write_errors:
                 raise write_errors[0]
-            # per-day lineage metrics from the WRITTEN chunk table (tiny:
-            # ~12x-compressed blobs + stats columns), partition-pruned to
-            # this batch's dates — avoids caching the encode output just to
-            # re-aggregate it
+            # the chunk write has committed, so its observation is final
+            # (reading it while the write is unfinished would block)
             t_ph = time.time()
-            import datetime as _dt
-
-            # explicit schema: an all-empty batch (zero chunks encoded)
-            # leaves the chunks dir with no parquet files, and schema
-            # inference would fail where an empty frame is the right answer
-            chunks_read_schema = chunks.withColumn(
-                "date", F.to_date("chunk_start")
-            ).schema
-            day_metrics = {
-                r.d.isoformat(): r
-                for r in spark.read.schema(chunks_read_schema)
-                .parquet(f"{spec.output_root}/chunks")
-                .filter(F.col("date").isin([_dt.date.fromisoformat(d) for d in batch]))
-                .groupBy(F.col("date").alias("d"))
-                .agg(
-                    F.count("*").alias("nc"),
-                    F.sum("n_points").alias("np"),
-                    F.sum("bytes_raw").alias("br"),
-                    F.sum("bytes_enc").alias("be"),
-                )
-                .collect()
-            }
+            m = chunk_obs.get
             _ph("metrics_collect", t_ph)
-            wall_each = (time.time() - t0) / max(1, len(batch))
-            for day in batch:
-                m = day_metrics.get(day)
-                man.mark_done(
-                    day,
-                    UnitMetrics(
-                        rows_read=(m.np if m else 0) or 0,
-                        chunks_encoded=(m.nc if m else 0) or 0,
-                        bytes_raw=(m.br if m else 0) or 0,
-                        bytes_compressed=(m.be if m else 0) or 0,
+            wall_each = (time.time() - t0) / len(batch)
+            man.mark_done_batch(
+                {
+                    day: UnitMetrics(
+                        rows_read=m[f"rows_read_{i}"] or 0,
+                        chunks_encoded=m[f"chunks_encoded_{i}"],
+                        bytes_raw=m[f"bytes_raw_{i}"] or 0,
+                        bytes_compressed=m[f"bytes_compressed_{i}"] or 0,
                         wall_s=wall_each,
-                    ),
-                )
+                    )
+                    for i, day in enumerate(batch)
+                }
+            )
         except Exception:
             for day in batch:
                 man.mark_failed(day)

@@ -9,24 +9,44 @@ partition_key is already 'done' in the manifest — and the Communication
 counters (core/.../statistics/communication/CommunicationTool.java:30-120)
 become explicit metric columns per work unit.
 
-Storage: an append-only parquet directory of manifest rows (atomic at the
-file level — each commit writes one new file; latest status per key wins by
-committed_at). On a cluster with an Iceberg catalog the same rows go to an
-Iceberg table via MERGE; the protocol is identical.
+Storage: an append-only parquet directory of manifest rows, one row per
+work unit (day). Each commit writes one new file — one per checkpoint
+batch, holding that batch's per-day rows — under a hidden temporary name
+and renames it into place, so a reader sees whole commits only; the latest
+status per key wins by committed_at (ties: the later file). The rows are
+tiny (one per day), so the driver reads them with pyarrow: resume and the
+summary launch no Spark job however long the history. On a cluster with an
+Iceberg catalog the same rows go to an Iceberg table via MERGE; the
+protocol is identical.
 """
 
 from __future__ import annotations
 
+import datetime as dt
 import os
 import time
 import uuid
-from dataclasses import dataclass
+from dataclasses import asdict, dataclass
 
 import pandas as pd
+import pyarrow as pa
+import pyarrow.dataset as pads
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from .schema import MANIFEST
+
+_ARROW_TYPES = {
+    "string": pa.string(),
+    "long": pa.int64(),
+    "double": pa.float64(),
+    # naive micros: what Spark reads back as TIMESTAMP (and what the
+    # pandas-written files of earlier versions hold)
+    "timestamp": pa.timestamp("us"),
+}
+#: schema.MANIFEST as an arrow schema; files with all-null metric columns
+#: (failed rows written by pandas) are cast to it on read
+_ARROW = pa.schema([(f.name, _ARROW_TYPES[f.dataType.typeName()]) for f in MANIFEST])
 
 
 @dataclass
@@ -48,84 +68,55 @@ class Manifest:
         os.makedirs(path, exist_ok=True)
 
     def _append(self, rows: list[dict]) -> None:
-        now = pd.Timestamp.utcnow().tz_localize(None)
-        pdf = pd.DataFrame(
-            [
-                {
-                    "job_id": self.job_id,
-                    "partition_key": r["partition_key"],
-                    "status": r["status"],
-                    "rows_read": r.get("rows_read"),
-                    "chunks_encoded": r.get("chunks_encoded"),
-                    "bytes_raw": r.get("bytes_raw"),
-                    "bytes_compressed": r.get("bytes_compressed"),
-                    "wall_s": r.get("wall_s"),
-                    "committed_at": now,
-                }
-                for r in rows
-            ]
+        now = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
+        table = pa.Table.from_pylist(
+            [{**r, "job_id": self.job_id, "committed_at": now} for r in rows], schema=_ARROW
         )
-        # micros precision (pandas default ns is unreadable as Spark TIMESTAMP)
-        pdf["committed_at"] = pdf["committed_at"].astype("datetime64[us]")
-        # one parquet file per commit: atomic, append-only, no read-modify-write
-        fname = os.path.join(self.path, f"m-{time.time_ns()}-{uuid.uuid4().hex[:8]}.parquet")
-        pdf.to_parquet(fname, index=False)
+        # one file per commit, renamed into place: atomic, append-only, no
+        # read-modify-write; the time_ns prefix orders files by commit
+        name = f"m-{time.time_ns()}-{uuid.uuid4().hex[:8]}.parquet"
+        tmp = os.path.join(self.path, f".{name}.tmp")
+        pq.write_table(table, tmp)
+        os.replace(tmp, os.path.join(self.path, name))
 
     def mark_done(self, partition_key: str, m: UnitMetrics) -> None:
+        self.mark_done_batch({partition_key: m})
+
+    def mark_done_batch(self, units: dict[str, UnitMetrics]) -> None:
+        """Commit every unit of a checkpoint batch in one file (one row each)."""
         self._append(
-            [
-                {
-                    "partition_key": partition_key,
-                    "status": "done",
-                    "rows_read": m.rows_read,
-                    "chunks_encoded": m.chunks_encoded,
-                    "bytes_raw": m.bytes_raw,
-                    "bytes_compressed": m.bytes_compressed,
-                    "wall_s": m.wall_s,
-                }
-            ]
+            [{"partition_key": k, "status": "done", **asdict(m)} for k, m in units.items()]
         )
 
     def mark_failed(self, partition_key: str) -> None:
         self._append([{"partition_key": partition_key, "status": "failed"}])
 
+    def _table(self) -> pa.Table:
+        """Every manifest row, all jobs, in commit-file order."""
+        files = sorted(f for f in os.listdir(self.path) if f.endswith(".parquet"))
+        return pads.dataset(
+            [os.path.join(self.path, f) for f in files], schema=_ARROW, format="parquet"
+        ).to_table()
+
+    def _latest(self) -> pd.DataFrame:
+        """Latest row per partition key of this job (latest status wins)."""
+        pdf = self._table().filter(pads.field("job_id") == self.job_id).to_pandas()
+        # stable sort keeps file (commit) order among equal timestamps
+        return pdf.sort_values("committed_at", kind="stable").drop_duplicates(
+            "partition_key", keep="last"
+        )
+
     def read(self) -> DataFrame:
-        if not any(f.endswith(".parquet") for f in os.listdir(self.path)):
-            return self.spark.createDataFrame([], MANIFEST)
-        return self.spark.read.schema(MANIFEST).parquet(self.path)
+        return self.spark.createDataFrame(self._table().to_pandas(), MANIFEST)
 
     def done_keys(self) -> set[str]:
         """Latest-status-wins set of completed partition keys for this job."""
-        df = self.read().filter(F.col("job_id") == self.job_id)
-        rows = (
-            df.groupBy("partition_key")
-            .agg(F.max_by("status", "committed_at").alias("status"))
-            .filter(F.col("status") == "done")
-            .collect()
-        )
-        return {r.partition_key for r in rows}
-
-    def filter_pending(self, df: DataFrame, key_col) -> DataFrame:
-        """Resume filter: drop rows whose work unit already committed.
-
-        For small done-sets this is an IN-list (driver-side, broadcastable);
-        the general form is a left-anti join against the manifest — both
-        prune before any heavy compute (the anti-join side is tiny: one row
-        per work unit, always broadcast)."""
-        done = self.done_keys()
-        if not done:
-            return df
-        return df.filter(~key_col.isin(*done))
+        latest = self._latest()
+        return set(latest.loc[latest["status"] == "done", "partition_key"])
 
     def metrics_summary(self) -> dict:
-        df = self.read().filter(
-            (F.col("job_id") == self.job_id) & (F.col("status") == "done")
-        )
-        row = df.agg(
-            F.count("*").alias("units"),
-            F.sum("rows_read").alias("rows_read"),
-            F.sum("chunks_encoded").alias("chunks_encoded"),
-            F.sum("bytes_raw").alias("bytes_raw"),
-            F.sum("bytes_compressed").alias("bytes_compressed"),
-        ).collect()[0]
-        return {k: (row[k] or 0) for k in row.asDict()}
+        """Unit count and metric sums over this job's completed units."""
+        latest = self._latest()
+        done = latest[latest["status"] == "done"]
+        cols = ["rows_read", "chunks_encoded", "bytes_raw", "bytes_compressed"]
+        return {"units": len(done), **{c: int(done[c].sum()) for c in cols}}

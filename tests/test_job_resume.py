@@ -215,3 +215,120 @@ def test_compact_recovers_orphaned_bak(spark, tmp_path):
     assert not any(p.startswith(".bak_date=") for p in os.listdir(root))
     got = sorted((r.conv_id, r.n) for r in spark.read.parquet(root).collect())
     assert got == exp  # no rows lost or duplicated through recovery + compact
+
+
+def _day_rows(spark, day: str):
+    """synth's 2025-01-01 turns moved to ``day``, time of day kept."""
+    d0 = dt.date(2025, 1, 1)
+    shift = (dt.date.fromisoformat(day) - d0).days
+    return (
+        synth.transcripts(spark, n_convs=6, avg_turns=8)
+        .filter(F.to_date("ts") == F.lit(d0))
+        .withColumn("ts", F.col("ts") + F.make_interval(days=F.lit(shift)))
+    )
+
+
+def test_empty_dir_mid_batch(spark, tmp_path):
+    """An empty date= dir (only a _SUCCESS marker) between two real days of
+    one batch: the batch reads only the dirs holding data, the empty day is
+    done with zero metrics, and tiers match a direct rollup."""
+    from addax_spark.manifest import Manifest
+    from addax_spark.operators.rollup import rollup_all_tiers
+
+    inp, out = str(tmp_path / "in"), str(tmp_path / "out")
+    for day in ("2025-02-01", "2025-02-03"):
+        _day_rows(spark, day).write.parquet(f"{inp}/date={day}")
+    os.makedirs(f"{inp}/date=2025-02-02")
+    open(f"{inp}/date=2025-02-02/_SUCCESS", "w").close()
+
+    res = run(spark, RollupJobSpec(inp, out, job_id="mid"))
+    raw = spark.read.parquet(f"{inp}/date=2025-02-01", f"{inp}/date=2025-02-03")
+    assert res["units"] == res["units_total"] == 3
+    assert res["rows_read"] == raw.count() > 0
+    rows = {
+        r.partition_key: r
+        for r in Manifest(spark, f"{out}/_manifest", "mid").read().collect()
+    }
+    assert rows.keys() == {"2025-02-01", "2025-02-02", "2025-02-03"}
+    assert all(r.status == "done" for r in rows.values())
+    empty = rows["2025-02-02"]
+    assert (empty.rows_read, empty.chunks_encoded, empty.bytes_raw, empty.bytes_compressed) == (0, 0, 0, 0)
+    for tier in ["1m", "1d"]:
+        got, exp = _table(spark, out, tier), rollup_all_tiers(raw)[tier]
+        assert got.exceptAll(exp).count() == 0 and exp.exceptAll(got).count() == 0, tier
+
+
+def _tasks_per_job(spark, fn) -> list[int]:
+    """Run ``fn``; the tasks each Spark job it launched ran (a stage reused
+    by a later job counts once, in the job that ran it)."""
+    sc = spark.sparkContext
+    sched = sc._jsc.sc().dagScheduler()
+    j0 = sched.nextJobId()
+    fn()
+    # the status store is fed by the listener bus: let it catch up
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker, seen, tasks = sc.statusTracker(), set(), []
+    for j in range(j0, sched.nextJobId()):
+        n = 0
+        for sid in tracker.getJobInfo(j).stageIds:
+            info = tracker.getStageInfo(sid)
+            if info is not None and sid not in seen:
+                seen.add(sid)
+                n += info.numCompletedTasks + info.numFailedTasks
+        tasks.append(n)
+    return tasks
+
+
+def test_increment_cost_independent_of_history(spark, tmp_path):
+    """One new day against 3 and against 40 completed days launches the same
+    Spark jobs and tasks (no listing of, or manifest scan over, the
+    history), no job is larger than the batch's days x shuffle partitions,
+    and the day's manifest metrics equal an aggregate of its written chunks."""
+    import shutil
+
+    from addax_spark.manifest import Manifest, UnitMetrics
+
+    template, new_day = "2025-01-01", "2025-03-01"
+    # the cascade's fixed repartition count stays under the bound below
+    spec = lambda inp, out: RollupJobSpec(inp, out, job_id="daily", n_partitions=4)  # noqa: E731
+    costs = {}
+    for n_hist in (3, 40):
+        inp, out = str(tmp_path / f"in{n_hist}"), str(tmp_path / f"out{n_hist}")
+        _day_rows(spark, template).write.parquet(f"{inp}/date={template}")
+        first = run(spark, spec(inp, out))
+        # the rest of the history: hard-linked copies of the template day's
+        # input, chunk and tier partitions, one manifest row per day
+        man = Manifest(spark, f"{out}/_manifest", "daily")
+        unit = UnitMetrics(first["rows_read"], first["chunks_encoded"], first["bytes_raw"],
+                           first["bytes_compressed"])
+        dirs = [f"{inp}/date={{}}", f"{out}/chunks/date={{}}"] + [
+            f"{out}/tiers/tier={t}/date={{}}" for t in ["1m", "5m", "1h", "1d"]]
+        for i in range(1, n_hist):
+            d = (dt.date.fromisoformat(template) + dt.timedelta(days=i)).isoformat()
+            for pattern in dirs:
+                shutil.copytree(pattern.format(template), pattern.format(d), copy_function=os.link)
+            man.mark_done(d, unit)
+        _day_rows(spark, new_day).write.parquet(f"{inp}/date={new_day}")
+
+        costs[n_hist] = _tasks_per_job(spark, lambda: run(spark, spec(inp, out)))
+
+        got = {
+            r.partition_key: r
+            for r in man.read().filter(F.col("partition_key") == new_day).collect()
+        }[new_day]
+        exp = (
+            spark.read.parquet(f"{out}/chunks")
+            .filter(F.col("date") == F.lit(dt.date.fromisoformat(new_day)))
+            .agg(F.count("*").alias("nc"), F.sum("n_points").alias("np"),
+                 F.sum("bytes_raw").alias("br"), F.sum("bytes_enc").alias("be"))
+            .collect()[0]
+        )
+        assert got.status == "done"
+        assert (got.rows_read, got.chunks_encoded, got.bytes_raw, got.bytes_compressed) == (
+            exp.np, exp.nc, exp.br, exp.be)
+        assert got.rows_read == spark.read.parquet(f"{inp}/date={new_day}").count() > 0
+
+    assert len(costs[3]) == len(costs[40]), costs
+    assert sum(costs[3]) == sum(costs[40]), costs
+    bound = 1 * int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert max(costs[40]) <= bound, costs
