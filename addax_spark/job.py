@@ -8,12 +8,14 @@ split -> schedule -> post). Here:
   bucket boundary and a chunk boundary, so per-day processing is exact);
   at cluster scale the day filter is a partition-pruned scan of the
   Iceberg/parquet `date(ts)` layout.
-- "schedule" = Spark's scheduler; per unit the tier cascade runs over ONE
-  colocating shuffle on hash(conv_id) (every (conv_id, bucket) grouping is
-  then exchange-free — plans.partitioning.colocate_by_series), the chunk
-  encode keeps its own column-pruned arrange shuffle, and every write
-  action runs on a background thread so driver-serial segments (planning,
-  commit, stragglers) overlap the next stage's parallel compute.
+- "schedule" = Spark's scheduler; per batch every tier is built and
+  written by ONE job over ONE colocating shuffle on hash(conv_id)
+  (operators.rollup.rollup_tiers: the 1m aggregate fans out to all tiers
+  inside the task and one (conv_id, tier, bucket) merge follows, with no
+  further exchange and no cache), written once to tiers/ partitioned by
+  (tier, date). The chunk encode keeps its own column-pruned arrange
+  shuffle and its write runs on a background thread, overlapping the tier
+  write on the main thread.
 - "failover" = the manifest: a rerun skips 'done' units and rewrites only
   its own partitions (dynamic partition overwrite -> idempotent).
 - "metrics" = per-unit rows_read / chunks_encoded / bytes_raw /
@@ -32,20 +34,21 @@ from __future__ import annotations
 
 import datetime as dt
 import os
-import threading
 import time
 import uuid
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .manifest import Manifest, UnitMetrics
-from .operators.rollup import rollup_cascade_step, rollup_from_raw
-from .operators.bucketize import TIER_ORDER
+from .operators.bucketize import TIER_ORDER, TIERS
 from .operators.gorilla import encode_chunks
-
-from .plans.partitioning import colocate_by_series, partitions_for_bytes
+# module attributes perfbench's tracer wraps (job.rollup_from_raw, ...)
+from .operators.rollup import rollup_cascade_step, rollup_from_raw  # noqa: F401
+from .operators.rollup import rollup_tiers, validate_tiers
+from .plans.partitioning import colocate_by_series
 
 #: writer-task fan-out per (tier, date) output cell (files per dir bound)
 _WRITE_SALT = 8
@@ -58,13 +61,13 @@ class RollupJobSpec:
     tiers: list[str] = field(default_factory=lambda: list(TIER_ORDER))
     chunk_tier: str = "1d"
     job_id: str = ""
-    # colocate=True pre-shuffles FULL raw rows once and CACHES them so every
-    # tier + the chunk encode read one shared exchange. Measured at 6M turns
-    # / local[8]: the raw-row cache materialization costs MORE (50s) than
-    # per-consumer pruned shuffles — and caching raw is impossible at 100 TB.
-    # Default False; the TIER CASCADE still gets an uncached conv_id
-    # repartition (cheap: replaces the 1m agg's own exchange and makes every
-    # cascade step exchange-free), while the chunk encode keeps its own
+    # colocate=True pre-shuffles FULL raw rows once and CACHES them so the
+    # tier write + the chunk encode read one shared exchange. Measured at 6M
+    # turns / local[8]: the raw-row cache materialization costs MORE (50s)
+    # than per-consumer pruned shuffles — and caching raw is impossible at
+    # 100 TB. Default False; the tier write still gets an uncached conv_id
+    # repartition (cheap: replaces the 1m agg's own exchange and leaves the
+    # all-tier merge exchange-free), while the chunk encode keeps its own
     # column-pruned arrange shuffle. True remains for small hot slices.
     colocate: bool = False
     n_partitions: int | None = None
@@ -75,13 +78,13 @@ class RollupJobSpec:
     # covers the whole batch (amortizes per-action overhead); the manifest
     # records each day so resume granularity stays per-day
     unit_batch: int = 16
-    # salted_writes=True restores the pre-r5 (date, conv-salt) repartition
-    # before every partitionBy write: bounds files/dir at _WRITE_SALT and
-    # keeps write tasks fine-grained, at the cost of a full extra shuffle
-    # per tier — for the 1m tier that shuffle carries last_text, i.e.
+    # salted_writes=True restores the pre-r5 ([tier,] date, conv-salt)
+    # repartition before every partitionBy write: bounds files/dir at
+    # _WRITE_SALT and keeps write tasks fine-grained, at the cost of a full
+    # extra shuffle of every tier's rows — the 1m rows carry last_text, i.e.
     # ~raw-sized bytes. False writes straight from the conv_id-clustered
-    # cascade/arrange output (the dynamic-partition writer sorts by date
-    # per task): files/dir = n_parts per date.
+    # tier merge/arrange output (the dynamic-partition writer sorts by
+    # (tier, date) per task): files/dir = n_parts per date.
     #
     # Default None = AUTO (r6, VERDICT r5 item 2): salted when scheduler
     # parallelism >= SPARK_GRAFT_SALTED_MIN_CORES (default 16). The r5
@@ -102,6 +105,9 @@ class RollupJobSpec:
     post_hook: object | None = None
 
     def __post_init__(self):
+        validate_tiers(self.tiers)
+        if self.chunk_tier not in TIERS:
+            raise ValueError(f"unknown chunk_tier {self.chunk_tier!r}; known: {list(TIERS)}")
         if not self.job_id:
             self.job_id = f"rollup-{uuid.uuid4().hex[:12]}"
 
@@ -152,11 +158,47 @@ def _observe_days(chunks: DataFrame, batch: list[str]) -> tuple[DataFrame, Obser
     return chunks.observe(obs, *exprs), obs
 
 
+def _build_tier_write(sl: DataFrame, spec: RollupJobSpec, n_parts: int) -> DataFrame:
+    """Every tier of a batch as one frame (``tier`` column included): one
+    hash(conv_id) exchange (the colocated cache's, or an uncached
+    repartition), then the 1m aggregate, the in-task fan-out and the
+    all-tier merge with no further exchange and no cache."""
+    slc = sl if spec.colocate else sl.repartition(n_parts, "conv_id")
+    return rollup_tiers(slc, spec.tiers, value=F.expr(spec.value_expr))
+
+
+def _write_partitioned(
+    df: DataFrame, part_col: str, path: str, salted: bool, by: tuple[str, ...] = ()
+) -> None:
+    """Dynamic-overwrite ``df`` under ``path`` partitioned by (*by, date),
+    date = to_date(part_col).
+
+    partitionOverwriteMode is pinned PER WRITE: with a user-supplied session
+    (default static) a batch overwrite would wipe ALL previously written
+    partitions and a resume would delete completed days' output.
+
+    Unsalted, there is no repartition before partitionBy: every writer input
+    (all-tier merge, arranged chunk table) is ALREADY hash(conv_id)-
+    clustered, so the dynamic-partition writer's implicit per-task sort
+    fans each output cell across ALL n_parts tasks, with no extra shuffle
+    (files/dir = n_parts per date). Salted repartitions on (*by, date,
+    conv-hash salt) first, bounding files/dir at _WRITE_SALT."""
+    cols = [*by, "date"]
+    out = df.withColumn("date", F.to_date(part_col))
+    if salted:
+        out = out.repartition(*cols, F.pmod(F.xxhash64("conv_id"), F.lit(_WRITE_SALT)))
+    out.write.mode("overwrite").option("partitionOverwriteMode", "dynamic").partitionBy(
+        *cols
+    ).parquet(path)
+
+
 def run(spark: SparkSession, spec: RollupJobSpec) -> dict:
     """Execute (or resume) a rollup job; returns the metrics summary.
 
     The summary carries a ``phases`` dict of accumulated per-phase driver
-    wall seconds (discover / tier counts / writer join / metrics / manifest)
+    wall seconds (init / discover / manifest_resume / tier_write — the one
+    job that builds and writes every tier — / writers_join — the wait for
+    the chunk write after it — / metrics_collect / manifest_summary)
     — the reference's PerfRecord phase accounting (PerfRecord.java:162-180)
     re-expressed, and the tool for attributing the per-job fixed term that
     caps N->4N scaling efficiency."""
@@ -209,37 +251,11 @@ def run(spark: SparkSession, spec: RollupJobSpec) -> dict:
         pending = pending[: spec.max_units]
 
     n_parts = spec.n_partitions or spark.sparkContext.defaultParallelism * 2
-
-    # partitionOverwriteMode pinned PER WRITE: with a user-supplied
-    # session (default static) a batch overwrite would wipe ALL
-    # previously written partitions and a resume would delete completed
-    # days' output.
-    #
-    # No repartition before partitionBy: every writer input here (tier
-    # cascade output, arranged chunk table) is ALREADY hash(conv_id)-
-    # clustered, so the dynamic-partition writer's implicit per-task sort
-    # on `date` fans each (tier, date) cell across ALL n_parts tasks —
-    # strictly more write parallelism than the old (date, salt)
-    # repartition, and it deletes a full extra shuffle per tier (for the
-    # 1m tier that shuffle carried last_text, i.e. ~raw-sized bytes;
-    # measured the largest single scaling cost in the r5 phase profile).
-    # Cost: files/dir = n_parts per date instead of _WRITE_SALT; callers
-    # that need few-big-files (small coarse tiers at modest scale) can
-    # pass salted=True to restore the bounded fan-in.
-    wsalt = F.pmod(F.xxhash64("conv_id"), F.lit(_WRITE_SALT))
     if spec.salted_writes is None:
         min_cores = int(os.environ.get("SPARK_GRAFT_SALTED_MIN_CORES", "16"))
         salted = spark.sparkContext.defaultParallelism >= min_cores
     else:
         salted = spec.salted_writes
-
-    def _write_partitioned(df: DataFrame, part_col: str, path: str) -> None:
-        out = df.withColumn("date", F.to_date(part_col))
-        if salted:
-            out = out.repartition(F.col("date"), wsalt)
-        out.write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("date").parquet(path)
 
     batches = [
         pending[i : i + spec.unit_batch] for i in range(0, len(pending), spec.unit_batch)
@@ -252,97 +268,49 @@ def run(spark: SparkSession, spec: RollupJobSpec) -> dict:
             wall_each = (time.time() - t0) / len(batch)
             man.mark_done_batch({d: UnitMetrics(wall_s=wall_each) for d in batch})
             continue
-        cached_raw = False
         if spec.colocate:
             sl = colocate_by_series(sl, n_parts).cache()
-            cached_raw = True
-
-        # Writer-thread pool: every write action runs on a background thread
-        # so its serial segments (driver planning, output commit, straggler
-        # tail) overlap the next stage's parallel compute. Measured at 6M
-        # turns (BENCH.md r3): batch wall 63 -> 35 s at local[8], and the
-        # fitted per-job fixed term drops ~20 -> ~11 s, which is what moves
-        # the N->4N scaling efficiency.
-        write_errors: list[BaseException] = []
-        writers: list[threading.Thread] = []
-
-        def _spawn(fn):
-            def g():
-                try:
-                    fn()
-                except BaseException as e:  # noqa: BLE001 — re-raised after join
-                    write_errors.append(e)
-
-            th = threading.Thread(target=g, daemon=True)
-            th.start()
-            writers.append(th)
-
-        cached_tiers: list[DataFrame] = []
         try:
-            if cached_raw:
+            if spec.colocate:
                 # materialize the shared colocated cache BEFORE the chunk
-                # write thread and the cascade race it (unmaterialized-cache
-                # race duplicates the colocating shuffle)
+                # write thread and the tier write race it (unmaterialized-
+                # cache race duplicates the colocating shuffle)
                 t_ph = time.time()
                 sl.count()
                 _ph("colocate_cache", t_ph)
-            # chunk pipeline first and on its own thread: the Python-worker
-            # encode overlaps the JVM-side tier aggregates. NOT cached — the
-            # write thread is its only consumer (the per-day metrics are an
-            # Observation on that same write), so the encode streams
-            # straight into the writer with no columnar-cache
-            # materialization.
-            chunks, chunk_obs = _observe_days(
-                encode_chunks(
-                    sl,
-                    value=F.expr(spec.value_expr).cast("double"),
-                    chunk_tier=spec.chunk_tier,
-                    order_cols=list(spec.order_cols),
-                ),
-                batch,
-            )
-            _spawn(lambda: _write_partitioned(chunks, "chunk_start", f"{spec.output_root}/chunks"))
-
-            # Tier cascade over a conv-colocated input: ONE shuffle on
-            # hash(conv_id), after which the 1m aggregation AND every cascade
-            # step satisfy their (conv_id, bucket) clustered distribution
-            # without further exchanges (plans.partitioning.colocate_by_series;
-            # exchange-free plan asserted in tests/test_rollup_parity.py).
-            # Each tier is cached and MATERIALIZED (count) before the next
-            # derives from it and before its write thread starts — the cached
-            # subtree must be the exact plan both consumers reference, and
-            # racing an unmaterialized cache duplicates the upstream compute
-            # (measured +25% at local[2]).
-            slc = sl if spec.colocate else sl.repartition(n_parts, "conv_id")
-            cur: DataFrame | None = None
-            for i, t in enumerate(spec.tiers):
-                cur = (
-                    rollup_from_raw(slc, t, value=F.expr(spec.value_expr))
-                    if cur is None
-                    else rollup_cascade_step(cur, t)
+            # Leaving the pool waits for the chunk write, on the failure path
+            # too: a still-running writer would race a retry committing into
+            # the same output directories.
+            with ThreadPoolExecutor(1, thread_name_prefix="chunk-write") as pool:
+                # chunk pipeline on its own thread: the Python-worker encode
+                # overlaps the JVM-side tier write. NOT cached — the write is
+                # its only consumer (the per-day metrics are an Observation
+                # on that same write), so the encode streams straight into
+                # the writer.
+                chunks, chunk_obs = _observe_days(
+                    encode_chunks(
+                        sl,
+                        value=F.expr(spec.value_expr).cast("double"),
+                        chunk_tier=spec.chunk_tier,
+                        order_cols=list(spec.order_cols),
+                    ),
+                    batch,
                 )
-                if i + 1 < len(spec.tiers):
-                    # two consumers (write thread + next cascade step):
-                    # cache and MATERIALIZE before either touches it
-                    cur = cur.cache()
-                    t_ph = time.time()
-                    cur.count()
-                    _ph(f"tier_{t}_count", t_ph)
-                    cached_tiers.append(cur)
-                # LAST tier: the write thread is the only consumer — no
-                # cache/count driver action; the thread computes the (narrow,
-                # exchange-free) final cascade step from the cached parent
-                _spawn(
-                    lambda df=cur, t=t: _write_partitioned(
-                        df, "bucket_start", f"{spec.output_root}/tiers/tier={t}"
-                    )
+                chunk_write = pool.submit(
+                    _write_partitioned, chunks, "chunk_start", f"{spec.output_root}/chunks", salted
                 )
-            t_ph = time.time()
-            for th in writers:
-                th.join()
-            _ph("writers_join", t_ph)
-            if write_errors:
-                raise write_errors[0]
+                t_ph = time.time()
+                _write_partitioned(
+                    _build_tier_write(sl, spec, n_parts),
+                    "bucket_start",
+                    f"{spec.output_root}/tiers",
+                    salted,
+                    by=("tier",),
+                )
+                _ph("tier_write", t_ph)
+                t_ph = time.time()
+                chunk_write.result()
+                _ph("writers_join", t_ph)
             # the chunk write has committed, so its observation is final
             # (reading it while the write is unfinished would block)
             t_ph = time.time()
@@ -366,14 +334,7 @@ def run(spark: SparkSession, spec: RollupJobSpec) -> dict:
                 man.mark_failed(day)
             raise
         finally:
-            # ALWAYS drain the writer threads — on the failure path too:
-            # leaving daemon writers running would race a retry/resume run
-            # committing into the same output directories
-            for th in writers:
-                th.join()
-            for c in cached_tiers:
-                c.unpersist()
-            if cached_raw:
+            if spec.colocate:
                 sl.unpersist()
 
     t_ph = time.time()

@@ -7,7 +7,9 @@ TDengineReader.java:124-141). Built natively on Spark groupBy/agg so Catalyst
 plans partial (map-side) + final aggregation — one shuffle per tier, and the
 cascade re-aggregates tier N from tier N-1 instead of rescanning raw data
 (the "continuous aggregate" pattern: 5m buckets = exact merge of five 1m
-buckets because 60 | 300 | 3600 | 86400).
+buckets because 60 | 300 | 3600 | 86400). `rollup_tiers` applies the same
+merge to every tier at once: the finest tier's rows fan out to one row per
+tier and one groupBy merges them all (the job's single tier write).
 
 Determinism contract (BASELINE.json: "exact rolled-up point parity"):
 - `last` = row with max (ts, turn_idx): max_by over a struct key — total
@@ -60,37 +62,53 @@ def rollup_from_raw(
     One shuffle on (key, bucket); partial aggregation is map-side so the
     shuffle carries one row per (key, bucket, map-partition), not raw turns.
     """
-    v = (value if value is not None else F.length("text")).cast("long")
-    ord_key = F.struct(F.col("ts"), F.col("turn_idx"))
     out = (
         df.withColumn("bucket_start", bucket_start("ts", tier))
         .groupBy(key, "bucket_start")
-        .agg(
-            F.count(F.lit(1)).alias("turn_count"),
-            F.sum(v).alias("sum_len"),
-            F.min(v).alias("min_len"),
-            F.max(v).alias("max_len"),
-            F.max_by(F.col("ts"), ord_key).alias("last_ts"),
-            F.max_by(F.col("turn_idx"), ord_key).alias("last_turn_idx"),
-            F.max_by(F.col("text"), ord_key).alias("last_text"),
-        )
+        .agg(*_raw_aggs(value))
         .withColumn("avg_len", F.col("sum_len").cast("double") / F.col("turn_count"))
     )
     return out.select(*_cols(key))
 
 
-def rollup_cascade_step(lower: DataFrame, tier: str, key: str = "conv_id") -> DataFrame:
-    """Exact re-aggregation of a coarser tier from the next finer tier table.
+def _raw_aggs(value: Column | None) -> list[Column]:
+    """Tier partials of raw turns; ``value`` defaults to ``length(text)``."""
+    v = (value if value is not None else F.length("text")).cast("long")
+    ord_key = F.struct(F.col("ts"), F.col("turn_idx"))
+    return [
+        F.count(F.lit(1)).alias("turn_count"),
+        F.sum(v).alias("sum_len"),
+        F.min(v).alias("min_len"),
+        F.max(v).alias("max_len"),
+        F.max_by(F.col("ts"), ord_key).alias("last_ts"),
+        F.max_by(F.col("turn_idx"), ord_key).alias("last_turn_idx"),
+        F.max_by(F.col("text"), ord_key).alias("last_text"),
+    ]
 
+
+def validate_tiers(tiers: list[str]) -> None:
+    """Raise ValueError unless ``tiers`` is a non-empty cascade of known
+    tiers whose widths strictly increase, each dividing the next — the
+    condition under which every coarser bucket is an exact merge of finer
+    ones."""
+    if not tiers:
+        raise ValueError("tiers must not be empty")
+    unknown = [t for t in tiers if t not in TIERS]
+    if unknown:
+        raise ValueError(f"unknown tiers {unknown}; known: {list(TIERS)}")
+    for a, b in zip(tiers, tiers[1:]):
+        if TIERS[a] >= TIERS[b] or TIERS[b] % TIERS[a]:
+            raise ValueError(f"tier {b} cannot be merged from {a}: {tiers}")
+
+
+def _merge(partials: DataFrame, key: str, by: tuple[str, ...] = ()) -> DataFrame:
+    """Exact merge of tier partials grouped by (key, *by, bucket_start):
     count/sum -> sum of partials; min/max -> min/max of partials; last ->
-    max_by on (last_ts, last_turn_idx); avg rederived from merged sums.
-    This is the classic partial/final agg merge — at 100 TB the 5m/1h/1d
-    tiers never touch raw data again.
-    """
+    max_by on (last_ts, last_turn_idx); avg rederived from the merged int64
+    sums. Associative, so any split of a bucket's rows merges to one result."""
     ord_key = F.struct(F.col("last_ts"), F.col("last_turn_idx"))
-    out = (
-        lower.withColumn("bucket_start2", bucket_start("bucket_start", tier))
-        .groupBy(key, "bucket_start2")
+    return (
+        partials.groupBy(key, *by, "bucket_start")
         .agg(
             F.sum("turn_count").alias("turn_count"),
             F.sum("sum_len").alias("sum_len"),
@@ -100,10 +118,47 @@ def rollup_cascade_step(lower: DataFrame, tier: str, key: str = "conv_id") -> Da
             F.max_by(F.col("last_turn_idx"), ord_key).alias("last_turn_idx"),
             F.max_by(F.col("last_text"), ord_key).alias("last_text"),
         )
-        .withColumnRenamed("bucket_start2", "bucket_start")
         .withColumn("avg_len", F.col("sum_len").cast("double") / F.col("turn_count"))
+        .select(*_cols(key), *by)
     )
-    return out.select(*_cols(key))
+
+
+def rollup_cascade_step(lower: DataFrame, tier: str, key: str = "conv_id") -> DataFrame:
+    """Exact re-aggregation of a coarser tier from the next finer tier table
+    (the one-tier case of :func:`rollup_tiers`'s merge). At 100 TB the
+    5m/1h/1d tiers never touch raw data again."""
+    return _merge(lower.withColumn("bucket_start", bucket_start("bucket_start", tier)), key)
+
+
+def rollup_tiers(
+    df: DataFrame,
+    tiers: list[str] | None = None,
+    value: Column | None = None,
+    key: str = "conv_id",
+) -> DataFrame:
+    """Every requested tier as ONE table: the tier columns plus ``tier``.
+
+    The finest tier is aggregated from raw; each of its rows then fans out
+    to one ``(tier, bucket_start)`` row per requested tier, and a single
+    ``groupBy(key, tier, bucket_start)`` merges them (the cascade merge, so
+    results equal :func:`rollup_all_tiers` exactly). Over an input already
+    hash-partitioned on ``key`` the whole plan needs no exchange: the
+    fan-out happens inside the task after the finest aggregate, so no
+    shuffle carries coarse-tier rows and nothing is cached.
+    """
+    tiers = TIER_ORDER if tiers is None else tiers
+    validate_tiers(tiers)
+    finest = rollup_from_raw(df, tiers[0], value, key)
+    fan = F.inline(
+        F.array(
+            *[
+                F.struct(F.lit(t).alias("tier"), bucket_start("bucket_start", t).alias("bucket_start"))
+                for t in tiers
+            ]
+        )
+    )
+    partials = finest.select(*[c for c in finest.columns if c != "bucket_start"], fan)
+    return _merge(partials, key, by=("tier",))
 
 
 def rollup_all_tiers(
@@ -117,8 +172,8 @@ def rollup_all_tiers(
     Only the 1m rollup reads raw turns; each coarser tier aggregates the
     previous one (≥60x smaller input per step at scale).
     """
-    tiers = tiers or TIER_ORDER
-    assert tiers == sorted(tiers, key=lambda t: TIERS[t])
+    tiers = TIER_ORDER if tiers is None else tiers
+    validate_tiers(tiers)
     out: dict[str, DataFrame] = {}
     prev: DataFrame | None = None
     for t in tiers:
@@ -154,35 +209,11 @@ def rollup_from_raw_salted(
     Use when single (key, bucket) groups are huge relative to a partition —
     e.g. 1d buckets of pathological conversations; for ordinary transcripts
     the unsalted single-shuffle plan is cheaper (one shuffle vs two)."""
-    v = (value if value is not None else F.length("text")).cast("long")
-    ord_key = F.struct(F.col("ts"), F.col("turn_idx"))
     salt = F.pmod(F.xxhash64(F.col(key), F.col("turn_idx")), F.lit(salt_buckets))
     partial = (
         df.withColumn("bucket_start", bucket_start("ts", tier))
         .withColumn("_salt", salt)
         .groupBy(key, "bucket_start", "_salt")
-        .agg(
-            F.count(F.lit(1)).alias("turn_count"),
-            F.sum(v).alias("sum_len"),
-            F.min(v).alias("min_len"),
-            F.max(v).alias("max_len"),
-            F.max_by(F.col("ts"), ord_key).alias("last_ts"),
-            F.max_by(F.col("turn_idx"), ord_key).alias("last_turn_idx"),
-            F.max_by(F.col("text"), ord_key).alias("last_text"),
-        )
+        .agg(*_raw_aggs(value))
     )
-    merge_ord = F.struct(F.col("last_ts"), F.col("last_turn_idx"))
-    out = (
-        partial.groupBy(key, "bucket_start")
-        .agg(
-            F.sum("turn_count").alias("turn_count"),
-            F.sum("sum_len").alias("sum_len"),
-            F.min("min_len").alias("min_len"),
-            F.max("max_len").alias("max_len"),
-            F.max_by(F.col("last_ts"), merge_ord).alias("last_ts"),
-            F.max_by(F.col("last_turn_idx"), merge_ord).alias("last_turn_idx"),
-            F.max_by(F.col("last_text"), merge_ord).alias("last_text"),
-        )
-        .withColumn("avg_len", F.col("sum_len").cast("double") / F.col("turn_count"))
-    )
-    return out.select(*_cols(key))
+    return _merge(partial, key)

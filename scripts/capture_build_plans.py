@@ -7,17 +7,27 @@ once-per-process written build table, so their entry plans are mostly a
 parquet scan; the interesting plans — the ones the optimization claims are
 about — belong to the build pipelines themselves. This captures those into
 plans/<tag>/_build_*.txt so plan-shape claims stay checkable offline.
+
+`_build_tier_write` is `job.run`'s all-tier write over a parquet copy of
+synth transcripts: one Exchange (the conv_id repartition) and no
+InMemoryTableScan.
+
+Usage: python scripts/capture_build_plans.py [out_dir] [suffix]
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 import sys
+import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from addax_spark import job as _job  # noqa: E402
+from addax_spark import synth  # noqa: E402
 from addax_spark.operators import dedup as _dedup  # noqa: E402
 from addax_spark.operators import gorilla as _gorilla  # noqa: E402
 from addax_spark.session import DEFAULT_SF_DIR, cpu_count, get_spark  # noqa: E402
@@ -51,6 +61,14 @@ def main() -> None:
     )
     cap("gorilla_encode", _gorilla.encode_chunks(
         pts, value="value", chunk_tier="1d", order_cols=["ts", "turn_idx"]))
+
+    tmp = tempfile.mkdtemp(prefix="capture_plans_")
+    raw = os.path.join(tmp, "transcripts.parquet")
+    synth.transcripts(spark, n_convs=40, avg_turns=30).write.mode("overwrite").parquet(raw)
+    spec = _job.RollupJobSpec(raw, "")
+    n_parts = spark.sparkContext.defaultParallelism * 2
+    cap("tier_write", _job._build_tier_write(spark.read.parquet(raw), spec, n_parts))
+    shutil.rmtree(tmp)
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     cap("embedding_lsh_pairs", _dedup.embedding_lsh_pairs(

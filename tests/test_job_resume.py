@@ -332,3 +332,66 @@ def test_increment_cost_independent_of_history(spark, tmp_path):
     assert sum(costs[3]) == sum(costs[40]), costs
     bound = 1 * int(spark.conf.get("spark.sql.shuffle.partitions"))
     assert max(costs[40]) <= bound, costs
+    # one tier write for all tiers, one chunk write, no per-tier action: a
+    # Spark job added back per tier or per batch fails here
+    assert len(costs[40]) <= 5, costs
+
+
+@pytest.mark.parametrize(
+    "kw",
+    [{"tiers": []}, {"tiers": ["1h", "5m"]}, {"tiers": ["1m", "1m"]}, {"tiers": ["1m", "1w"]},
+     {"chunk_tier": "2d"}],
+    ids=["empty", "descending", "repeated", "unknown", "chunk_tier"],
+)
+def test_spec_rejects_invalid_tiers(kw):
+    """A tier list the cascade cannot merge exactly (or an unknown chunk
+    tier) fails at spec construction, not as silently wrong buckets."""
+    with pytest.raises(ValueError):
+        RollupJobSpec("in", "out", **kw)
+
+
+def test_spec_rejects_non_dividing_tier_widths(monkeypatch):
+    """Increasing widths are not enough: a 7m bucket is no merge of 5m ones."""
+    from addax_spark.operators import bucketize
+
+    monkeypatch.setitem(bucketize.TIERS, "7m", 420)
+    RollupJobSpec("in", "out", tiers=["1m", "7m"])
+    with pytest.raises(ValueError):
+        RollupJobSpec("in", "out", tiers=["5m", "7m"])
+
+
+def test_chunk_write_failure_marks_batch_failed(spark, raw_path, tmp_path, monkeypatch):
+    """A failing chunk write (the background writer) fails the run after the
+    writer has finished: every day of the batch is marked failed and no
+    writer thread is left running; a rerun completes those days."""
+    import threading
+
+    from addax_spark import job
+    from addax_spark.manifest import Manifest
+    from addax_spark.operators.rollup import rollup_all_tiers
+
+    raw = spark.read.parquet(raw_path)
+    days = sorted(r.d.isoformat() for r in raw.select(F.to_date("ts").alias("d")).distinct().collect())
+    spec = RollupJobSpec(raw_path, str(tmp_path / "out"), job_id="fail", unit_batch=len(days))
+
+    real_encode = job.encode_chunks
+
+    def failing_encode(*args, **kwargs):
+        chunks = real_encode(*args, **kwargs)
+        return chunks.withColumn("bytes_enc", F.raise_error(F.lit("chunk write failed")).cast("long"))
+
+    monkeypatch.setattr(job, "encode_chunks", failing_encode)
+    with pytest.raises(Exception, match="chunk write failed"):
+        run(spark, spec)
+    latest = Manifest(spark, f"{spec.output_root}/_manifest", "fail")._latest()
+    assert sorted(latest["partition_key"]) == days
+    assert set(latest["status"]) == {"failed"}
+    assert not [t.name for t in threading.enumerate() if t.name.startswith("chunk-write")]
+
+    monkeypatch.setattr(job, "encode_chunks", real_encode)
+    res = run(spark, spec)
+    assert res["units"] == len(days) and res["units_skipped_resume"] == 0
+    assert res["rows_read"] == raw.count()
+    for tier, exp in rollup_all_tiers(raw).items():
+        got = _table(spark, spec.output_root, tier)
+        assert got.exceptAll(exp).count() == 0 and exp.exceptAll(got).count() == 0, tier

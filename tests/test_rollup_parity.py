@@ -9,6 +9,7 @@ exact, not just self-consistent.
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
 from addax_spark import synth
 from addax_spark.operators.bucketize import TIERS
@@ -129,6 +130,34 @@ def test_entry_cascade_single_exchange(spark):
     df = api.rollup_tier(spark, "/root/testdata/sf0.001", "1d")
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange") == 1, plan
+
+
+@pytest.mark.parametrize("tiers", [["1m", "5m", "1h", "1d"], ["1m", "1h"]])
+def test_rollup_tiers_equals_cascade(spark, fixture_data, tiers):
+    """The one-pass fan-out + merge gives every tier exactly as the
+    tier-by-tier cascade does, also for a subset of tiers."""
+    from addax_spark.operators.rollup import rollup_tiers
+
+    got = rollup_tiers(fixture_data, tiers)
+    exp = rollup_all_tiers(fixture_data, tiers)
+    assert sorted(r.tier for r in got.select("tier").distinct().collect()) == sorted(tiers)
+    for tier in tiers:
+        g = got.filter(F.col("tier") == tier).drop("tier")
+        assert g.exceptAll(exp[tier]).count() == 0, tier
+        assert exp[tier].exceptAll(g).count() == 0, tier
+
+
+def test_rollup_tiers_one_exchange_no_cache(spark, fixture_data):
+    """After one hash repartition on conv_id the all-tier plan needs no
+    further exchange and reads no cache."""
+    from addax_spark.operators.rollup import rollup_tiers
+
+    plan = (
+        rollup_tiers(fixture_data.repartition(4, "conv_id"))
+        ._jdf.queryExecution().executedPlan().toString()
+    )
+    assert plan.count("Exchange") == 1, plan
+    assert "InMemoryTableScan" not in plan, plan
 
 
 def test_grouped_median_null_values_cross_engine(spark, ddb, tmp_path_factory):
